@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ListenerBusBridge
 
 import BenchPolicy.QueryResult
 
@@ -168,19 +169,39 @@ object Bench {
     * ENCLOSING its block), so each deviation carries its own
     * adjudication. */
   /** Suite-wide Spark-job counter (round 19, VERDICT r18 #6): one
-    * listener registered in main; [[runSuite]] snapshots deltas around
-    * each query's SECOND timed pass (fully warm — memo builds landed
-    * in the warmup) so the JSON carries the per-query job count, the
+    * listener registered in main; [[runSuite]] counts the jobs of each
+    * query's SECOND timed pass (fully warm — memo builds landed in the
+    * warmup) so the JSON carries the per-query job count, the
     * deterministic structure evidence the scaling block lacks at an SF
     * where wall-clock ratios measure scheduling. Listener events post
-    * async; a 50 ms settle brackets the counted window (off by a
-    * straggler at worst — ProfileJobs stays the precise tool). The
-    * sleeps sit OUTSIDE the timed region and never touch the reported
-    * seconds. */
-  private val jobCounter = new java.util.concurrent.atomic.AtomicInteger
+    * asynchronously, so [[apply]] drains the listener bus before the
+    * reset and before the read: every earlier job's event is delivered
+    * before the reset, and every job of `body` before the read — exact
+    * attribution with no settle sleeps. The drains sit OUTSIDE the
+    * timed region and never touch the reported seconds. */
+  private[graft] final class JobCounter(sc: org.apache.spark.SparkContext) {
+    private val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener: org.apache.spark.scheduler.SparkListener =
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          started.incrementAndGet(); ()
+        }
+      }
+    sc.addSparkListener(listener)
+
+    /** `body`'s result and the number of Spark jobs it started. */
+    def apply[A](body: => A): (A, Int) = {
+      ListenerBusBridge.drain(sc)
+      started.set(0)
+      val a = body
+      ListenerBusBridge.drain(sc)
+      (a, started.get)
+    }
+  }
 
   private def runSuite(spark: SparkSession, sfDir: String,
-      warm: Boolean, countJobs: Boolean = false)
+      warm: Boolean, countJobs: Option[JobCounter] = None)
       : (Seq[QueryResult], Seq[Double], Map[String, Int]) = {
     val samples = scala.collection.mutable.ArrayBuffer.empty[Double]
     val jobsOf = scala.collection.mutable.Map.empty[String, Int]
@@ -201,18 +222,22 @@ object Bench {
         }
         // two timed passes, report the min — shields the recorded
         // number from one-off GC pauses / scheduler noise
-        val passes = (1 to 2).map { pi =>
-          val counting = countJobs && pi == 2
-          if (counting) { Thread.sleep(50); jobCounter.set(0) }
+        def pass(): (Double, Boolean) = {
           val t0 = System.nanoTime()
           val ok =
             try { fn(spark, sfDir).count(); true }
             catch { case _: Throwable => false }
           val dt = (System.nanoTime() - t0) / 1e9
           Caches.releaseAll() // per-request cache arena
-          if (counting) { Thread.sleep(50); jobsOf(name) = jobCounter.get }
           (dt, ok)
         }
+        val passes = Seq(pass(), countJobs match {
+          case Some(counter) =>
+            val (p, jobs) = counter(pass())
+            jobsOf(name) = jobs
+            p
+          case None => pass()
+        })
         val good = passes.filter(_._2).map(_._1)
         if (good.nonEmpty) (name, good.min, true)
         else (name, passes.map(_._1).min, false)
@@ -270,20 +295,14 @@ object Bench {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobCounter.incrementAndGet(); ()
-        }
-      })
+    val jobCounter = new JobCounter(spark.sparkContext)
 
     val loadBefore = loadAvg()
     val (c1Before, cnBefore, crBefore) = canary()
     val faultBefore = faultProbe()
     val scBefore = sparkCanary(spark)
     var (results, samples1, jobs1) =
-      runSuite(spark, sfDir, warm = true, countJobs = true)
+      runSuite(spark, sfDir, warm = true, countJobs = Some(jobCounter))
     var allSamples = samples1
     def total0 = results.map(_.sec).sum
     var total = total0

@@ -35,6 +35,11 @@ object Caches {
         new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
     }
 
+  /** Give the calling thread its arena now, so threads it starts next
+    * inherit it: an InheritableThreadLocal passes on only a value the
+    * parent has already set. */
+  private[graft] def ensureArena(): Unit = { registered.get(); () }
+
   /** Cache `df` and register it for this thread's next [[releaseAll]]. */
   def cache(df: DataFrame): DataFrame = {
     df.cache()

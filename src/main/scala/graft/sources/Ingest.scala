@@ -254,12 +254,60 @@ object Ingest {
   def exportTrainset(df: DataFrame, outDir: String, partitionCol: String): Unit =
     df.write.mode("overwrite").partitionBy(partitionCol).parquet(outDir)
 
+  /** Run independent write branches as concurrent Spark jobs — the
+    * reference indexer builds each index's segment on its own
+    * (`nidx/src/indexer.rs:254-435` index_resource per index). Most
+    * index-table writes of a small ingest are single-task jobs; run
+    * one after another they leave all but one core idle. Each branch
+    * runs on a pool made for this call, sized
+    * `min(branches, defaultParallelism)`, and is submitted through
+    * Spark's `SQLExecution.withThreadLocalCaptured`, so the caller's
+    * job group, local properties and active session carry over; pool
+    * threads also inherit the caller's [[graft.Caches]] arena. Returns
+    * once EVERY branch has finished and every pool thread has exited —
+    * so no write lands after the caller sees the result — and then
+    * rethrows the first failing branch's exception (in argument order)
+    * as thrown, not wrapped. A branch's own writes stay in order; only
+    * the start order of independent tables changes.
+    */
+  private[graft] def inParallel(spark: org.apache.spark.sql.SparkSession)(
+      branches: (() => Unit)*): Unit = {
+    graft.Caches.ensureArena()
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(branches.size, spark.sparkContext.defaultParallelism)),
+      (r: Runnable) => {
+        val t = new Thread(r, "graft-ingest")
+        t.setDaemon(true); threads.add(t); t
+      })
+    try {
+      val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val runs = branches.map(b =>
+        org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(session, pool)(b()))
+      runs.flatMap(r => scala.util.Try(r.join()).failed.toOption).headOption.foreach {
+        case e: java.util.concurrent.CompletionException if e.getCause != null => throw e.getCause
+        case e => throw e
+      }
+    } finally {
+      pool.shutdown()
+      threads.forEach(_.join())
+    }
+  }
+
   /** End-to-end index build — the broker-message → index ETL
     * (`ingest/orm/index_message.py` IndexMessageBuilder): one pass over
     * the source documents materializes every index table the retrieval
     * operators read. Each table is an independent narrow pipeline off
-    * the same scan; at scale they run as one job with shared input and
-    * land partitioned by their own access key (DESIGN.md).
+    * the same scan, landing partitioned by its own access key
+    * (DESIGN.md). Independent tables build as concurrent jobs
+    * ([[inParallel]]); a table derived from another's written output
+    * follows it in the same branch, and the longer branches start
+    * first: paragraphs → {par_postings → {par_termfreq, par_deletes},
+    * par_doclengths}; fields → field_paragraphs → {fieldpar_postings,
+    * fieldpar_doclengths}; postings → termfreq → deletes; bigrams →
+    * bigramfreq; shingles; signatures → sigbands; doclengths;
+    * positions; langprofiles; vectors. `bm25_stats` then reads both
+    * length tables.
     */
   def buildIndex(
       docs: DataFrame,
@@ -274,44 +322,7 @@ object Ingest {
       langCol: Option[String] = None,
       shingleBuckets: Int = 16,
       conversations: Option[DataFrame] = None): Unit = {
-    splitParagraphs(docs, idCol, textCol, parTokens = parTokens)
-      .write.mode("overwrite").parquet(s"$outDir/paragraphs")
-    // field-level data model: typed field rows + per-field paragraphs
-    // (resources→fields→paragraphs) — field filters become structural
-    // semi-joins against these instead of id-string parsing. The
-    // at-rest `fields` table is METADATA ONLY (rid, field_type,
-    // field_id — text lives in the source/paragraph tables), and
-    // `field_paragraphs` stores only NON-BODY fields: the t/body
-    // paragraphs are exactly the main paragraph table's rows (same
-    // {rid}/t/body/{s}-{e} ids), so serving composes them from there
-    // instead of storing the corpus text twice (Find.findParagraphs).
-    // cache across the two consumers: the fields lineage re-tokenizes
-    // the corpus, and without the cache both writes would pay it
-    val fieldsDf = fieldsTable(docs, idCol, textCol).cache()
-    // CONVERSATION fields (`resources.proto` ConversationField; splits
-    // appended per message, `ingest/orm/brain_v2.py:266-307`): rows
-    // (idCol, field_id, split, text) index like any other field — one
-    // metadata row per (rid, c, field_id) and per-split paragraphs
-    // keyed {rid}/c/{field_id}/{split}/{start}-{end}. The split level
-    // lives only in the paragraph id: field filters address the FIELD
-    // (`c/chat`), never a single split.
-    val convPars = conversations.map(c =>
-      splitConversationParagraphs(c, idCol, "field_id", "split", textCol,
-        parTokens = parTokens))
-    try {
-      val fieldMeta = fieldsDf.drop("f_text")
-      conversations.map(c => fieldMeta.unionByName(
-          c.select(col(idCol), lit("c").as("field_type"),
-            col("field_id").cast("string").as("field_id")).distinct()))
-        .getOrElse(fieldMeta)
-        .write.mode("overwrite").parquet(s"$outDir/fields")
-      val fieldPars = splitFieldParagraphs(
-        fieldsDf.where(!(col("field_type") === "t" && col("field_id") === "body")),
-        idCol, parTokens = parTokens)
-      convPars.map(cp => fieldPars.unionByName(cp.drop("split")))
-        .getOrElse(fieldPars)
-        .write.mode("overwrite").parquet(s"$outDir/field_paragraphs")
-    } finally fieldsDf.unpersist()
+    val sp = spark(docs)
     // BM25 posting pair for the NON-BODY field paragraphs — field-
     // filtered BM25 serves the union of this pair with the body pair
     // (par_postings/par_doclengths: body paragraph ids are identical),
@@ -337,30 +348,214 @@ object Ingest {
         sum(when(!coalesce(col("repeated_in_field"), lit(false)), 1L)
           .otherwise(0L)).over(w))
     }
-    val fpars = spark(docs).read.parquet(s"$outDir/field_paragraphs")
-    withXrepDf(withRepeated(termPostings(fpars, "paragraph_id", "p_text"), fpars))
-      .write.mode("overwrite").parquet(s"$outDir/fieldpar_postings")
-    withRepeated(graft.functions.Bm25.docLengths(fpars, "paragraph_id", "p_text"),
-        fpars)
-      .write.mode("overwrite").parquet(s"$outDir/fieldpar_doclengths")
-    termPostings(docs, idCol, textCol)
-      .write.mode("overwrite").parquet(s"$outDir/postings")
-    graft.functions.Bm25.docLengths(docs, idCol, textCol)
-      .write.mode("overwrite").parquet(s"$outDir/doclengths")
-    // positional postings: (id, pos, term) — quoted-phrase queries
-    // serve this table with per-term pruned scans instead of
-    // re-tokenizing text (tantivy stores positions in its postings)
-    graft.operators.PhraseSearch.positions(docs, idCol, textCol)
-      .write.mode("overwrite").parquet(s"$outDir/positions")
-    // paragraph-level postings + lengths: the nidx_paragraph analog —
-    // BM25-scored paragraph search serves these instead of scanning
-    // paragraph text at query time
-    val pars = spark(docs).read.parquet(s"$outDir/paragraphs")
-    withXrepDf(withRepeated(termPostings(pars, "paragraph_id", "p_text"), pars))
-      .write.mode("overwrite").parquet(s"$outDir/par_postings")
-    withRepeated(graft.functions.Bm25.docLengths(pars, "paragraph_id", "p_text"),
-        pars)
-      .write.mode("overwrite").parquet(s"$outDir/par_doclengths")
+    // language-ID model: per-language char-trigram profiles trained
+    // from the labeled corpus ([[trainLangProfiles]]). CONDITIONAL
+    // outputs follow the overwrite-or-delete rule: a re-ingest that no
+    // longer produces an optional table must REMOVE the previous
+    // build's copy, or serving binds a model/table trained on deleted
+    // documents (the edge_resources staleness class).
+    def dropStale(sub: String): Unit = {
+      val p = new org.apache.hadoop.fs.Path(s"$outDir/$sub")
+      val fs = p.getFileSystem(sp.sparkContext.hadoopConfiguration)
+      if (fs.exists(p)) { fs.delete(p, true); () }
+    }
+    // SymSpell deletion neighborhood: (variant, term) rows for
+    // distance-1 fuzzy matching as an equality lookup instead of a
+    // Levenshtein dictionary scan ([[graft.functions.TextFunctions.deleteVariants]]).
+    // Sorted by variant so a query's variant IN (...) predicate prunes
+    // row groups via parquet min/max stats.
+    def writeDeletes(terms: DataFrame, sub: String): Unit =
+      terms.select(explode(TextFunctions.deleteVariants(col("term"))).as("variant"),
+          col("term"))
+        .repartitionByRange(col("variant"))
+        .sortWithinPartitions("variant")
+        .write.mode("overwrite").parquet(s"$outDir/$sub")
+    inParallel(sp)(
+      () => {
+        splitParagraphs(docs, idCol, textCol, parTokens = parTokens)
+          .write.mode("overwrite").parquet(s"$outDir/paragraphs")
+        // paragraph-level postings + lengths: the nidx_paragraph analog —
+        // BM25-scored paragraph search serves these instead of scanning
+        // paragraph text at query time
+        val pars = sp.read.parquet(s"$outDir/paragraphs")
+        inParallel(sp)(
+          () => {
+            withXrepDf(withRepeated(termPostings(pars, "paragraph_id", "p_text"), pars))
+              .write.mode("overwrite").parquet(s"$outDir/par_postings")
+            inParallel(sp)(
+              // paragraph-derived term dictionary: the /suggest serving
+              // table — the reference suggests over the PARAGRAPH index
+              // (`nidx/src/searcher/shard_suggest.rs:45-160`), so the
+              // dictionary rolls up the paragraph postings; repeated
+              // paragraphs stay out of it — the reference's paragraph
+              // suggest query unconditionally requires
+              // repeated_in_field = 0 (`search_query.rs:150-167`)
+              () => sp.read.parquet(s"$outDir/par_postings")
+                .where(!coalesce(col("repeated_in_field"), lit(false)))
+                .groupBy("term").agg(sum("tf").cast("long").as("freq"))
+                .write.mode("overwrite").parquet(s"$outDir/par_termfreq"),
+              // the PARAGRAPH dictionary's deletion neighborhood (round
+              // 15): the fuzzy FALLBACK (`nidx_paragraph/src/reader.rs:
+              // 96-118`) expands against the paragraph index's terms, so
+              // it needs the par-side table — same layout as `deletes`,
+              // letting the fallback's lev≤1 legs run as variant-IN
+              // rowgroup lookups instead of a levenshtein scan of the
+              // whole dictionary (SURVEY §7.4). Derived from ALL
+              // paragraph posting terms — NOT par_termfreq: tantivy's FST
+              // holds every indexed term, repeated paragraphs included
+              // (repeated_in_field is a query-time facet filter, not an
+              // indexing exclusion), and the fallback expands against
+              // that FST.
+              () => writeDeletes(
+                sp.read.parquet(s"$outDir/par_postings").select(col("term")).distinct(),
+                "par_deletes"))
+          },
+          () => withRepeated(
+              graft.functions.Bm25.docLengths(pars, "paragraph_id", "p_text"), pars)
+            .write.mode("overwrite").parquet(s"$outDir/par_doclengths"))
+      },
+      () => {
+        // field-level data model: typed field rows + per-field paragraphs
+        // (resources→fields→paragraphs) — field filters become structural
+        // semi-joins against these instead of id-string parsing. The
+        // at-rest `fields` table is METADATA ONLY (rid, field_type,
+        // field_id — text lives in the source/paragraph tables), and
+        // `field_paragraphs` stores only NON-BODY fields: the t/body
+        // paragraphs are exactly the main paragraph table's rows (same
+        // {rid}/t/body/{s}-{e} ids), so serving composes them from there
+        // instead of storing the corpus text twice (Find.findParagraphs).
+        // cache across the two consumers: the fields lineage re-tokenizes
+        // the corpus, and without the cache both writes would pay it
+        val fieldsDf = fieldsTable(docs, idCol, textCol).cache()
+        // CONVERSATION fields (`resources.proto` ConversationField; splits
+        // appended per message, `ingest/orm/brain_v2.py:266-307`): rows
+        // (idCol, field_id, split, text) index like any other field — one
+        // metadata row per (rid, c, field_id) and per-split paragraphs
+        // keyed {rid}/c/{field_id}/{split}/{start}-{end}. The split level
+        // lives only in the paragraph id: field filters address the FIELD
+        // (`c/chat`), never a single split.
+        val convPars = conversations.map(c =>
+          splitConversationParagraphs(c, idCol, "field_id", "split", textCol,
+            parTokens = parTokens))
+        try {
+          val fieldMeta = fieldsDf.drop("f_text")
+          conversations.map(c => fieldMeta.unionByName(
+              c.select(col(idCol), lit("c").as("field_type"),
+                col("field_id").cast("string").as("field_id")).distinct()))
+            .getOrElse(fieldMeta)
+            .write.mode("overwrite").parquet(s"$outDir/fields")
+          val fieldPars = splitFieldParagraphs(
+            fieldsDf.where(!(col("field_type") === "t" && col("field_id") === "body")),
+            idCol, parTokens = parTokens)
+          convPars.map(cp => fieldPars.unionByName(cp.drop("split")))
+            .getOrElse(fieldPars)
+            .write.mode("overwrite").parquet(s"$outDir/field_paragraphs")
+        } finally fieldsDf.unpersist()
+        val fpars = sp.read.parquet(s"$outDir/field_paragraphs")
+        inParallel(sp)(
+          () => withXrepDf(withRepeated(termPostings(fpars, "paragraph_id", "p_text"), fpars))
+            .write.mode("overwrite").parquet(s"$outDir/fieldpar_postings"),
+          () => withRepeated(
+              graft.functions.Bm25.docLengths(fpars, "paragraph_id", "p_text"), fpars)
+            .write.mode("overwrite").parquet(s"$outDir/fieldpar_doclengths"))
+      },
+      () => {
+        termPostings(docs, idCol, textCol)
+          .write.mode("overwrite").parquet(s"$outDir/postings")
+        // term-frequency dictionary: the suggest/fuzzy serving table — a
+        // pure rollup of the postings (freq = total occurrences), the
+        // tantivy-FST analog (`nidx_paragraph/src/fuzzy_query.rs:55-120`)
+        sp.read.parquet(s"$outDir/postings")
+          .groupBy("term").agg(sum("tf").cast("long").as("freq"))
+          .write.mode("overwrite").parquet(s"$outDir/termfreq")
+        writeDeletes(sp.read.parquet(s"$outDir/termfreq"), "deletes")
+      },
+      () => {
+        // bigram postings (id, w1, w2, tf) + corpus bigram dictionary —
+        // the n-gram LM serving pair
+        // ([[graft.operators.CorpusStats.bigramLogProbFromPostings]]):
+        // a perplexity-scoring request joins them on the bigram key, so
+        // BOTH sides are bucketed on (w1, w2) and the request-time
+        // dictionary join reuses the at-rest layout exchange-free — the
+        // same move as shingles/sigbands. The dictionary is a pure rollup
+        // of the postings (rebuilt from the written table, not the plan,
+        // so the tokenize pass isn't re-run)
+        val bgArr = TextFunctions.shingles(TextFunctions.tokens(col(textCol)), 2)
+        val (bw1, bw2) = TextFunctions.bigramPair(col("bg"))
+        docs.select(col(idCol), explode(bgArr).as("bg"))
+          .select(col(idCol), bw1.as("w1"), bw2.as("w2"))
+          .groupBy(idCol, "w1", "w2").agg(count(lit(1)).as("tf"))
+          .write.mode("overwrite")
+          .bucketBy(shingleBuckets, "w1", "w2").sortBy("w1", "w2")
+          .option("path", s"$outDir/bigrams")
+          .saveAsTable(bucketedTableName("bigrams", outDir))
+        // rollup reads the CATALOG table, not plain parquet: the catalog
+        // carries the (w1, w2) bucket spec, so this corpus-scale groupBy
+        // aggregates bucket-locally with no exchange (a parquet read would
+        // lose the layout and shuffle the whole posting table)
+        sp.table(bucketedTableName("bigrams", outDir))
+          .groupBy("w1", "w2").agg(sum("tf").cast("long").as("freq"))
+          .write.mode("overwrite")
+          .bucketBy(shingleBuckets, "w1", "w2").sortBy("w1", "w2")
+          .option("path", s"$outDir/bigramfreq")
+          .saveAsTable(bucketedTableName("bigramfreq", outDir))
+      },
+      () => {
+        // hashed-shingle postings: (id, xxhash64(shingle), set size) — the
+        // n-gram Jaccard serving table ([[graft.operators.Dedup.ngramJaccardFromShingles]]);
+        // like signatures, a pure per-document function valid for any
+        // corpus subset via semi-join. Written BUCKETED on the join key
+        // (external table, data under outDir like every sibling): the
+        // near-dup request's self-join on `shingle` then reuses the at-rest
+        // layout — both sides scan co-partitioned buckets and the
+        // per-request Exchange disappears (plan-pinned in ScaleDesignSpec).
+        val shingleArr = array_distinct(
+          TextFunctions.shingles(TextFunctions.tokens(col(textCol)), shingleSize))
+        docs.select(col(idCol),
+            transform(shingleArr, s => xxhash64(s)).as("ss"), size(shingleArr).as("sz"))
+          .select(col(idCol), explode(col("ss")).as("shingle"), col("sz"))
+          .write.mode("overwrite")
+          .bucketBy(shingleBuckets, "shingle").sortBy("shingle")
+          .option("path", s"$outDir/shingles")
+          .saveAsTable(bucketedTableName("shingles", outDir))
+      },
+      () => {
+        // MinHash signatures: a per-document function of the text (no
+        // corpus statistics), so near-dup requests over any corpus subset
+        // serve this table via semi-join instead of re-tokenizing
+        graft.operators.Dedup.minHashSignatures(
+            docs.select(col(idCol), explode(TextFunctions.shingles(
+              TextFunctions.tokens(col(textCol)), shingleSize)).as("shingle")),
+            idCol, numHashes)
+          .write.mode("overwrite").parquet(s"$outDir/signatures")
+        // LSH band rows (id, band, bv) from the signatures, bucketed on the
+        // band bucket key — the candidate-pair self-join
+        // ([[graft.operators.Dedup.minHashLshFromBands]]) joins on
+        // (band, bv) and reuses this layout exchange-free, same as shingles
+        graft.operators.Dedup.signatureBands(
+            sp.read.parquet(s"$outDir/signatures"), idCol, numHashes, bandSize = 2)
+          .write.mode("overwrite")
+          .bucketBy(shingleBuckets, "band", "bv").sortBy("band", "bv")
+          .option("path", s"$outDir/sigbands")
+          .saveAsTable(bucketedTableName("sigbands", outDir))
+      },
+      () => graft.functions.Bm25.docLengths(docs, idCol, textCol)
+        .write.mode("overwrite").parquet(s"$outDir/doclengths"),
+      // positional postings: (id, pos, term) — quoted-phrase queries
+      // serve this table with per-term pruned scans instead of
+      // re-tokenizing text (tantivy stores positions in its postings)
+      () => graft.operators.PhraseSearch.positions(docs, idCol, textCol)
+        .write.mode("overwrite").parquet(s"$outDir/positions"),
+      () => langCol match {
+        case Some(lc) => trainLangProfiles(docs, textCol, lc)
+          .write.mode("overwrite").parquet(s"$outDir/langprofiles")
+        case None => dropStale("langprofiles")
+      },
+      () =>
+        if (withVectors)
+          tfidfVectors(docs, idCol, textCol, embeddingDim)
+            .write.mode("overwrite").parquet(s"$outDir/vectors")
+        else dropStale("vectors"))
     // corpus-level BM25 statistics at rest (round 18): the (N, avgdl)
     // pairs every unrestricted request otherwise aggregates live — one
     // row per population (doc table; default repeated-excluded
@@ -369,8 +564,8 @@ object Ingest {
     // (count + avg over long dl — exact, order-independent), so served
     // scores are bit-identical to the live aggregation.
     locally {
-      val dlsTab = spark(docs).read.parquet(s"$outDir/doclengths")
-      val pdls = spark(docs).read.parquet(s"$outDir/par_doclengths")
+      val dlsTab = sp.read.parquet(s"$outDir/doclengths")
+      val pdls = sp.read.parquet(s"$outDir/par_doclengths")
       def statRow(name: String, dls: DataFrame) =
         dls.agg(count(lit(1)).cast("double").as("n_docs"),
             avg(col("dl")).as("avgdl"))
@@ -382,140 +577,11 @@ object Ingest {
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$outDir/bm25_stats")
     }
-    // term-frequency dictionary: the suggest/fuzzy serving table — a
-    // pure rollup of the postings (freq = total occurrences), the
-    // tantivy-FST analog (`nidx_paragraph/src/fuzzy_query.rs:55-120`)
-    spark(docs).read.parquet(s"$outDir/postings")
-      .groupBy("term").agg(sum("tf").cast("long").as("freq"))
-      .write.mode("overwrite").parquet(s"$outDir/termfreq")
-    // bigram postings (id, w1, w2, tf) + corpus bigram dictionary —
-    // the n-gram LM serving pair
-    // ([[graft.operators.CorpusStats.bigramLogProbFromPostings]]):
-    // a perplexity-scoring request joins them on the bigram key, so
-    // BOTH sides are bucketed on (w1, w2) and the request-time
-    // dictionary join reuses the at-rest layout exchange-free — the
-    // same move as shingles/sigbands. The dictionary is a pure rollup
-    // of the postings (rebuilt from the written table, not the plan,
-    // so the tokenize pass isn't re-run)
-    val bgArr = TextFunctions.shingles(TextFunctions.tokens(col(textCol)), 2)
-    val (bw1, bw2) = TextFunctions.bigramPair(col("bg"))
-    docs.select(col(idCol), explode(bgArr).as("bg"))
-      .select(col(idCol), bw1.as("w1"), bw2.as("w2"))
-      .groupBy(idCol, "w1", "w2").agg(count(lit(1)).as("tf"))
-      .write.mode("overwrite")
-      .bucketBy(shingleBuckets, "w1", "w2").sortBy("w1", "w2")
-      .option("path", s"$outDir/bigrams")
-      .saveAsTable(bucketedTableName("bigrams", outDir))
-    // rollup reads the CATALOG table, not plain parquet: the catalog
-    // carries the (w1, w2) bucket spec, so this corpus-scale groupBy
-    // aggregates bucket-locally with no exchange (a parquet read would
-    // lose the layout and shuffle the whole posting table)
-    spark(docs).table(bucketedTableName("bigrams", outDir))
-      .groupBy("w1", "w2").agg(sum("tf").cast("long").as("freq"))
-      .write.mode("overwrite")
-      .bucketBy(shingleBuckets, "w1", "w2").sortBy("w1", "w2")
-      .option("path", s"$outDir/bigramfreq")
-      .saveAsTable(bucketedTableName("bigramfreq", outDir))
-    // paragraph-derived term dictionary: the /suggest serving table —
-    // the reference suggests over the PARAGRAPH index
-    // (`nidx/src/searcher/shard_suggest.rs:45-160`), so the dictionary
-    // rolls up the paragraph postings
-    // repeated paragraphs stay out of the dictionary — the reference's
-    // paragraph suggest query unconditionally requires
-    // repeated_in_field = 0 (`search_query.rs:150-167` suggest_query)
-    spark(docs).read.parquet(s"$outDir/par_postings")
-      .where(!coalesce(col("repeated_in_field"), lit(false)))
-      .groupBy("term").agg(sum("tf").cast("long").as("freq"))
-      .write.mode("overwrite").parquet(s"$outDir/par_termfreq")
-    // SymSpell deletion neighborhood: (variant, term) rows for
-    // distance-1 fuzzy matching as an equality lookup instead of a
-    // Levenshtein dictionary scan ([[graft.functions.TextFunctions.deleteVariants]]).
-    // Sorted by variant so a query's variant IN (...) predicate prunes
-    // row groups via parquet min/max stats.
-    spark(docs).read.parquet(s"$outDir/termfreq")
-      .select(explode(TextFunctions.deleteVariants(col("term"))).as("variant"),
-        col("term"))
-      .repartitionByRange(col("variant"))
-      .sortWithinPartitions("variant")
-      .write.mode("overwrite").parquet(s"$outDir/deletes")
-    // the PARAGRAPH dictionary's deletion neighborhood (round 15): the
-    // fuzzy FALLBACK (`nidx_paragraph/src/reader.rs:96-118`) expands
-    // against the paragraph index's terms, so it needs the par-side
-    // table — same layout as `deletes`, letting the fallback's lev≤1
-    // legs run as variant-IN rowgroup lookups instead of a levenshtein
-    // scan of the whole dictionary (SURVEY §7.4's deletion-neighborhood
-    // advice applied to the fallback path). Derived from ALL paragraph
-    // posting terms — NOT par_termfreq: tantivy's FST holds every
-    // indexed term, repeated paragraphs included (repeated_in_field is
-    // a query-time facet filter, not an indexing exclusion), and the
-    // fallback expands against that FST.
-    spark(docs).read.parquet(s"$outDir/par_postings")
-      .select(col("term")).distinct()
-      .select(explode(TextFunctions.deleteVariants(col("term"))).as("variant"),
-        col("term"))
-      .repartitionByRange(col("variant"))
-      .sortWithinPartitions("variant")
-      .write.mode("overwrite").parquet(s"$outDir/par_deletes")
-    // hashed-shingle postings: (id, xxhash64(shingle), set size) — the
-    // n-gram Jaccard serving table ([[graft.operators.Dedup.ngramJaccardFromShingles]]);
-    // like signatures, a pure per-document function valid for any
-    // corpus subset via semi-join. Written BUCKETED on the join key
-    // (external table, data under outDir like every sibling): the
-    // near-dup request's self-join on `shingle` then reuses the at-rest
-    // layout — both sides scan co-partitioned buckets and the
-    // per-request Exchange disappears (plan-pinned in ScaleDesignSpec).
-    val shingleArr = array_distinct(
-      TextFunctions.shingles(TextFunctions.tokens(col(textCol)), shingleSize))
-    docs.select(col(idCol),
-        transform(shingleArr, s => xxhash64(s)).as("ss"), size(shingleArr).as("sz"))
-      .select(col(idCol), explode(col("ss")).as("shingle"), col("sz"))
-      .write.mode("overwrite")
-      .bucketBy(shingleBuckets, "shingle").sortBy("shingle")
-      .option("path", s"$outDir/shingles")
-      .saveAsTable(bucketedTableName("shingles", outDir))
-    // MinHash signatures: a per-document function of the text (no
-    // corpus statistics), so near-dup requests over any corpus subset
-    // serve this table via semi-join instead of re-tokenizing
-    graft.operators.Dedup.minHashSignatures(
-        docs.select(col(idCol), explode(TextFunctions.shingles(
-          TextFunctions.tokens(col(textCol)), shingleSize)).as("shingle")),
-        idCol, numHashes)
-      .write.mode("overwrite").parquet(s"$outDir/signatures")
-    // LSH band rows (id, band, bv) from the signatures, bucketed on the
-    // band bucket key — the candidate-pair self-join
-    // ([[graft.operators.Dedup.minHashLshFromBands]]) joins on
-    // (band, bv) and reuses this layout exchange-free, same as shingles
-    graft.operators.Dedup.signatureBands(
-        spark(docs).read.parquet(s"$outDir/signatures"), idCol, numHashes, bandSize = 2)
-      .write.mode("overwrite")
-      .bucketBy(shingleBuckets, "band", "bv").sortBy("band", "bv")
-      .option("path", s"$outDir/sigbands")
-      .saveAsTable(bucketedTableName("sigbands", outDir))
-    // language-ID model: per-language char-trigram profiles trained
-    // from the labeled corpus ([[trainLangProfiles]]). CONDITIONAL
-    // outputs follow the overwrite-or-delete rule: a re-ingest that no
-    // longer produces an optional table must REMOVE the previous
-    // build's copy, or serving binds a model/table trained on deleted
-    // documents (the edge_resources staleness class).
-    def dropStale(sub: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(s"$outDir/$sub")
-      val fs = p.getFileSystem(spark(docs).sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) { fs.delete(p, true); () }
-    }
-    langCol match {
-      case Some(lc) => trainLangProfiles(docs, textCol, lc)
-        .write.mode("overwrite").parquet(s"$outDir/langprofiles")
-      case None => dropStale("langprofiles")
-    }
-    if (withVectors)
-      tfidfVectors(docs, idCol, textCol, embeddingDim)
-        .write.mode("overwrite").parquet(s"$outDir/vectors")
-    else dropStale("vectors")
     // provenance: the build parameters the serving side must match
     // (signature width is additionally self-describing — its columns —
     // and loudly validated in minHashLshFromSignatures; shingle size
     // is recorded here)
-    writeText(spark(docs), s"$outDir/text_meta.json",
+    writeText(sp, s"$outDir/text_meta.json",
       s"""{"shingle_size": $shingleSize, "num_hashes": $numHashes, "par_tokens": $parTokens, "id_col": "$idCol"}""")
   }
 
@@ -606,32 +672,6 @@ object Ingest {
       facetsCol: Option[String] = None,
       typedCols: Seq[String] = Nil,
       resourceCol: Option[String] = None): Unit = {
-    // `resourceCol` carries each edge occurrence's RESOURCE provenance.
-    // The reference indexes one relation doc per resource field and its
-    // prefilter intersects graph queries with the allowed resources'
-    // term set (`nidx_relation/src/reader.rs:261-272` apply_prefilter
-    // over `resource_field_id`); the columnar analog is a third table,
-    // `edge_resources` — (triplet, resource_id) at per-resource
-    // granularity — that a filtered graph search semi-joins against the
-    // prefilter's allowed ids. Kept SEPARATE from the deduped triplet
-    // copies so unfiltered queries scan the smaller distinct tables.
-    resourceCol match {
-      case Some(rc) =>
-        edges.select((Seq(col(srcCol).as("src"), col(relCol).as("rel"),
-            col(dstCol).as("dst")) ++ typedCols.map(col) :+
-            col(rc).as("resource_id")): _*)
-          .distinct()
-          .repartitionByRange(col("src"))
-          .sortWithinPartitions("src", "rel", "dst", "resource_id")
-          .write.mode("overwrite").parquet(s"$outDir/edge_resources")
-      case None =>
-        // a re-ingest WITHOUT provenance must not leave a stale
-        // provenance table from a previous build — serving would bind
-        // edges the new corpus no longer has
-        val p = new org.apache.hadoop.fs.Path(s"$outDir/edge_resources")
-        val fs = p.getFileSystem(spark(edges).sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) { fs.delete(p, true); () }
-    }
     // the dedup aggregation ALSO records each triplet's multiplicity
     // `n` — the support weight ranked graph expansion sums
     // ([[graft.operators.GraphOps.iterativeExpandFrom]]), free here
@@ -656,14 +696,45 @@ object Ingest {
           .as("facets"))
       case None => grouped.agg(count(lit(1)).cast("long").as("n"))
     }).cache()
-    try {
-      e.repartitionByRange(col("src"))
-        .sortWithinPartitions("src", "rel", "dst")
-        .write.mode("overwrite").parquet(s"$outDir/edges")
-      e.repartitionByRange(col("dst"))
-        .sortWithinPartitions("dst", "rel", "src")
-        .write.mode("overwrite").parquet(s"$outDir/edges_by_dst")
-    } finally { e.unpersist(); () }
+    try inParallel(spark(edges))(
+      // `resourceCol` carries each edge occurrence's RESOURCE provenance.
+      // The reference indexes one relation doc per resource field and its
+      // prefilter intersects graph queries with the allowed resources'
+      // term set (`nidx_relation/src/reader.rs:261-272` apply_prefilter
+      // over `resource_field_id`); the columnar analog is a third table,
+      // `edge_resources` — (triplet, resource_id) at per-resource
+      // granularity — that a filtered graph search semi-joins against the
+      // prefilter's allowed ids. Kept SEPARATE from the deduped triplet
+      // copies so unfiltered queries scan the smaller distinct tables.
+      () => resourceCol match {
+        case Some(rc) =>
+          edges.select((Seq(col(srcCol).as("src"), col(relCol).as("rel"),
+              col(dstCol).as("dst")) ++ typedCols.map(col) :+
+              col(rc).as("resource_id")): _*)
+            .distinct()
+            .repartitionByRange(col("src"))
+            .sortWithinPartitions("src", "rel", "dst", "resource_id")
+            .write.mode("overwrite").parquet(s"$outDir/edge_resources")
+        case None =>
+          // a re-ingest WITHOUT provenance must not leave a stale
+          // provenance table from a previous build — serving would bind
+          // edges the new corpus no longer has
+          val p = new org.apache.hadoop.fs.Path(s"$outDir/edge_resources")
+          val fs = p.getFileSystem(spark(edges).sparkContext.hadoopConfiguration)
+          if (fs.exists(p)) { fs.delete(p, true); () }
+      },
+      // the two sorted copies stay in ONE branch: the first write fills
+      // `e`'s cache before the second reads it (two concurrent first
+      // reads would each run the cache's fill job)
+      () => {
+        e.repartitionByRange(col("src"))
+          .sortWithinPartitions("src", "rel", "dst")
+          .write.mode("overwrite").parquet(s"$outDir/edges")
+        e.repartitionByRange(col("dst"))
+          .sortWithinPartitions("dst", "rel", "src")
+          .write.mode("overwrite").parquet(s"$outDir/edges_by_dst")
+      })
+    finally { e.unpersist(); () }
   }
 
   /** Ingest-time VECTOR index build — the at-rest ANN layout the
@@ -706,44 +777,51 @@ object Ingest {
     val spark = vectors.sparkSession
     import spark.implicits._
 
-    // --- IVF: deterministic seed → Lloyd rounds → final assignment ---
-    def collectCentroids(df: DataFrame): Seq[(Int, Seq[Float])] =
-      df.collect().toSeq
-        .map(r => (r.getInt(0), r.getSeq[Float](1)))
-        .sortBy(_._1)
-    var cents = collectCentroids(
-      vectors.orderBy(col(idCol)).limit(numCentroids)
-        .select(row_number().over(org.apache.spark.sql.expressions.Window
-            .orderBy(col(idCol))).cast("int").as("cid"),
-          col(vecCol).as("cvec")))
-    (1 to kmeansIters).foreach { _ =>
-      // collect per round: K×dim floats (driver-scale); chaining the
-      // lazy plans instead would double the tree every iteration
-      cents = collectCentroids(
-        VectorSearch.kmeansStep(vectors, idCol, vecCol,
-            cents.toDF("cid", "cvec"), "cid", "cvec")
-          .select(col("centroid_id").cast("int").as("cid"),
-            transform(col("cvec"), _.cast("float")).as("cvec")))
-    }
-    val centDf = cents.toDF("cid", "cvec")
-    val assignments = VectorSearch.ivfAssign(
-        vectors, idCol, vecCol, centDf, "cid", "cvec")
-      .select(col(idCol), col("centroid_id"))
-    assignments.write.mode("overwrite").parquet(s"$outDir/assignments")
-    val members = spark.read.parquet(s"$outDir/assignments")
-      .groupBy("centroid_id").agg(count(lit(1)).as("n_members"))
-      .collect().map(r => r.getAs[Number](0).intValue -> r.getLong(1)).toMap
-    cents.map { case (cid, cv) => (cid, cv, members.getOrElse(cid, 0L)) }
-      .toDF("cid", "cvec", "n_members")
-      .write.mode("overwrite").parquet(s"$outDir/centroids")
-
-    // --- PQ: deterministic seed → Lloyd rounds → binary codes ---
-    val seed = vectors.orderBy(col(idCol)).limit(numCodewords)
-      .select(col(vecCol)).collect().toSeq
-      .zipWithIndex.map { case (r, i) => (i + 1, r.getSeq[Float](0)) }
-    val codebook = VectorSearch.pqTrain(vectors, idCol, vecCol, seed, m, pqIters)
-    codebook.toDF("cid", "cw")
-      .write.mode("overwrite").parquet(s"$outDir/codebook")
+    // the IVF chain and the PQ chain are independent until the codes
+    // table joins their outputs, so they build as concurrent jobs
+    var codebook: Seq[(Int, Seq[Float])] = Nil
+    inParallel(spark)(
+      () => {
+        // --- IVF: deterministic seed → Lloyd rounds → final assignment ---
+        def collectCentroids(df: DataFrame): Seq[(Int, Seq[Float])] =
+          df.collect().toSeq
+            .map(r => (r.getInt(0), r.getSeq[Float](1)))
+            .sortBy(_._1)
+        var cents = collectCentroids(
+          vectors.orderBy(col(idCol)).limit(numCentroids)
+            .select(row_number().over(org.apache.spark.sql.expressions.Window
+                .orderBy(col(idCol))).cast("int").as("cid"),
+              col(vecCol).as("cvec")))
+        (1 to kmeansIters).foreach { _ =>
+          // collect per round: K×dim floats (driver-scale); chaining the
+          // lazy plans instead would double the tree every iteration
+          cents = collectCentroids(
+            VectorSearch.kmeansStep(vectors, idCol, vecCol,
+                cents.toDF("cid", "cvec"), "cid", "cvec")
+              .select(col("centroid_id").cast("int").as("cid"),
+                transform(col("cvec"), _.cast("float")).as("cvec")))
+        }
+        val centDf = cents.toDF("cid", "cvec")
+        val assignments = VectorSearch.ivfAssign(
+            vectors, idCol, vecCol, centDf, "cid", "cvec")
+          .select(col(idCol), col("centroid_id"))
+        assignments.write.mode("overwrite").parquet(s"$outDir/assignments")
+        val members = spark.read.parquet(s"$outDir/assignments")
+          .groupBy("centroid_id").agg(count(lit(1)).as("n_members"))
+          .collect().map(r => r.getAs[Number](0).intValue -> r.getLong(1)).toMap
+        cents.map { case (cid, cv) => (cid, cv, members.getOrElse(cid, 0L)) }
+          .toDF("cid", "cvec", "n_members")
+          .write.mode("overwrite").parquet(s"$outDir/centroids")
+      },
+      () => {
+        // --- PQ: deterministic seed → Lloyd rounds → binary codes ---
+        val seed = vectors.orderBy(col(idCol)).limit(numCodewords)
+          .select(col(vecCol)).collect().toSeq
+          .zipWithIndex.map { case (r, i) => (i + 1, r.getSeq[Float](0)) }
+        codebook = VectorSearch.pqTrain(vectors, idCol, vecCol, seed, m, pqIters)
+        codebook.toDF("cid", "cw")
+          .write.mode("overwrite").parquet(s"$outDir/codebook")
+      })
     VectorSearch.pqCodesBinary(vectors, idCol, vecCol, codebook, m)
       .join(spark.read.parquet(s"$outDir/assignments"), idCol)
       .write.mode("overwrite").partitionBy("centroid_id")
@@ -757,8 +835,9 @@ object Ingest {
     * a resource can carry several named embedding models with different
     * dimensions). Each vectorset trains its own IVF centroids and PQ
     * codebook ([[buildVectorIndex]] on its slice — sets are independent,
-    * so a production build runs them as parallel jobs), and the serving
-    * tables fold into ONE layout keyed by the vectorset:
+    * so each set builds as its own concurrent branch, [[inParallel]]),
+    * and the serving tables fold into ONE layout keyed by the vectorset
+    * (the four folds run concurrently too):
     *
     *  - `codes` partitioned by (vectorset, centroid_id): a named-set
     *    request prunes to its vectorset directory FIRST, then probes
@@ -815,7 +894,7 @@ object Ingest {
       require(sets.contains(vs),
         s"vectorset config for '$vs' matches no set in the input (have: ${sets.mkString(", ")})")
     }
-    sets.foreach { vs =>
+    inParallel(sp)(sets.toSeq.map(vs => () => {
       val cfg = configs.getOrElse(vs, VectorSetConfig())
       val slice0 = vectors.where(col(vsCol) === vs).drop(vsCol)
       val slice =
@@ -825,7 +904,7 @@ object Ingest {
             _.cast("float")))
       buildVectorIndex(slice, idCol, vecCol, s"$outDir/_sets/$vs",
         numCentroids, kmeansIters, numCodewords, m, pqIters)
-    }
+    }): _*)
     def fold(sub: String, partitionCols: Seq[String]): Unit = {
       val all = sets.map(vs => sp.read.parquet(s"$outDir/_sets/$vs/$sub")
         .withColumn("vectorset", lit(vs))).reduce(_ unionByName _)
@@ -833,10 +912,11 @@ object Ingest {
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
         .parquet(s"$outDir/$sub")
     }
-    fold("centroids", Seq("vectorset"))
-    fold("codebook", Seq("vectorset"))
-    fold("assignments", Seq("vectorset"))
-    fold("codes", Seq("vectorset", "centroid_id"))
+    inParallel(sp)(
+      () => fold("centroids", Seq("vectorset")),
+      () => fold("codebook", Seq("vectorset")),
+      () => fold("assignments", Seq("vectorset")),
+      () => fold("codes", Seq("vectorset", "centroid_id")))
     // the per-set staging trees are folded copies — delete them, or the
     // dominant artifact (the code table) is stored twice at rest
     val staging = new org.apache.hadoop.fs.Path(s"$outDir/_sets")

@@ -273,117 +273,129 @@ object IncrementalIndex {
         .write.mode("overwrite").parquet(s"$segDir/docs")
       val live = latest.where(!col("deleted"))
       val seqOf = live.select(col(idCol), col(seqCol))
-      // `df` is dropped: a PER-SEGMENT document frequency is not the
-      // served population's (latest-wins across segments), and the
-      // scorer's at-rest fast path keys on the column's presence —
-      // streamed roots must keep the live aggregation
-      graft.sources.Ingest.termPostings(live, idCol, textCol).drop("df")
-        .join(seqOf, idCol)
-        .write.mode("overwrite").parquet(s"$segDir/postings")
-      graft.functions.Bm25.docLengths(live, idCol, textCol)
-        .join(seqOf, idCol)
-        .write.mode("overwrite").parquet(s"$segDir/doclengths")
-      // positional postings — quoted-phrase queries over the streamed
-      // corpus serve these exactly like the batch index's table
-      graft.operators.PhraseSearch.positions(live, idCol, textCol)
-        .join(seqOf, idCol)
-        .write.mode("overwrite").parquet(s"$segDir/positions")
-      val pars = graft.sources.Ingest.splitParagraphs(live, idCol, textCol)
-        .join(seqOf, idCol).cache()
-      try {
-        pars.write.mode("overwrite").parquet(s"$segDir/paragraphs")
-        // paragraph-level BM25 pair: rows re-keyed to their doc's
-        // (id, seq) via the paragraph table so cross-segment
-        // latest-wins stays the same winner semi-join;
-        // repeated_in_field rides along like in the batch pair so the
-        // streamed surface serves the same default search mode
-        val parKeys = pars.select(col("paragraph_id"), col(idCol), col(seqCol),
-          col("repeated_in_field"))
-        graft.sources.Ingest.termPostings(pars, "paragraph_id", "p_text")
-          .drop("df") // per-segment df ≠ served population, as above
-          .join(parKeys, "paragraph_id")
-          .write.mode("overwrite").parquet(s"$segDir/par_postings")
-        graft.functions.Bm25.docLengths(pars, "paragraph_id", "p_text")
-          .join(parKeys, "paragraph_id")
-          .write.mode("overwrite").parquet(s"$segDir/par_doclengths")
-      } finally pars.unpersist()
-      // MinHash signatures — near-dup requests over the streamed corpus
-      // serve these like the batch table (a pure per-document function,
-      // so per-segment rows union with the winner semi-join). The
-      // parameters default to buildIndex's; a deployment diverging
-      // there must diverge HERE too (the width self-describes and is
-      // validated at serve time, the shingle size does not).
-      graft.operators.Dedup.minHashSignatures(
-          live.select(col(idCol), explode(graft.functions.TextFunctions.shingles(
-            graft.functions.TextFunctions.tokens(col(textCol)), shingleSize)).as("shingle")),
-          idCol, numHashes = numHashes)
-        .join(seqOf, idCol)
-        .write.mode("overwrite").parquet(s"$segDir/signatures")
-      // relation triplets — the message-carried relations of each live
-      // doc (`noderesources.proto:201-209` IndexRelations ride the
-      // broker message; the resource node is the source), exploded to
-      // (id, seq, rel, dst) rows so cross-segment latest-wins is the
-      // same winner semi-join as every sibling table. A doc update
-      // REPLACES its relations: the old segment's rows lose the winner
-      // join, exactly like its postings
-      relationsCol.foreach { rc =>
-        live.select(col(idCol), col(seqCol), explode(col(rc)).as("__r"))
-          .select(col(idCol), col(seqCol),
-            col("__r.rel").as("rel"), col("__r.dst").as("dst"))
-          .write.mode("overwrite").parquet(s"$segDir/edges")
-      }
-      // MESSAGE-GRAIN conversation rows — the /augment and /ask
-      // Conversational selectors read whole messages (the reference
-      // reads maindb, `augmentor/fields.py:300-310`; chunked paragraph
-      // tables cannot reconstruct them), so conversation-bearing
-      // streams carry the messages alongside the index. Each message
-      // is a struct (field_id, split, mtype, mtext); a doc update
-      // REPLACES its conversation (the rows lose the winner semi-join
-      // like its postings), a tombstone removes it
-      messagesCol.foreach { mc =>
-        live.select(col(idCol), col(seqCol), explode(col(mc)).as("__m"))
-          .select(col(idCol), col(seqCol),
-            col("__m.field_id").as("field_id"),
-            col("__m.split").as("split"),
-            col("__m.mtype").as("mtype"),
-            col("__m.mtext").as("mtext"))
-          .write.mode("overwrite").parquet(s"$segDir/messages")
-      }
-      // one codes/raw pair per named vectorset (the Option form is the
-      // single default set), vectorset-tagged and partitioned
-      // (vectorset, centroid_id) like the batch per-set layout — a
-      // named-set query prunes its vectorset directory inside every
-      // segment
-      val sets = vectorSets ++ vectors.map("default" -> _)
-      // an all-tombstone batch has no vectors to encode — and a
-      // PARTITIONED write of an empty frame produces a directory with
-      // no schema-carrying files, which poisons every later read of
-      // the root. Skip the pair entirely: the serving union filters on
-      // per-segment `hasSub("codes")`, so an absent dir is the one
-      // empty representation every reader already handles.
-      if (sets.nonEmpty && !live.isEmpty) {
-        import graft.operators.VectorSearch
-        import batch.sparkSession.implicits._
-        def forSet(vs: String, spec: SegmentVectorSpec) = {
-          val vecs = live.select(col(idCol), col(seqCol),
-            col(spec.vecCol).as("embedding"))
-          val centDf = spec.centroids.toDF("cid", "cvec")
-          val codes = VectorSearch
-            .pqCodesBinary(vecs, idCol, "embedding", spec.codebook, spec.m)
-            .join(VectorSearch.ivfAssign(vecs, idCol, "embedding",
-              centDf, "cid", "cvec").select(col(idCol), col("centroid_id")), idCol)
-            .join(seqOf, idCol)
-            .withColumn("vectorset", lit(vs))
-          (vecs.withColumn("vectorset", lit(vs)), codes)
-        }
-        val pairs = sets.toSeq.sortBy(_._1).map { case (vs, spec) => forSet(vs, spec) }
-        pairs.map(_._1).reduce(_ unionByName _)
-          .write.mode("overwrite").partitionBy("vectorset")
-          .parquet(s"$segDir/vectors")
-        pairs.map(_._2).reduce(_ unionByName _)
-          .write.mode("overwrite").partitionBy("vectorset", "centroid_id")
-          .parquet(s"$segDir/codes")
-      }
+      // the docs write above filled `latest`'s cache; every sibling
+      // table below reads only `live` off it, so they build as
+      // concurrent jobs (Ingest.inParallel)
+      graft.sources.Ingest.inParallel(batch.sparkSession)(
+        // `df` is dropped: a PER-SEGMENT document frequency is not the
+        // served population's (latest-wins across segments), and the
+        // scorer's at-rest fast path keys on the column's presence —
+        // streamed roots must keep the live aggregation
+        () => graft.sources.Ingest.termPostings(live, idCol, textCol).drop("df")
+          .join(seqOf, idCol)
+          .write.mode("overwrite").parquet(s"$segDir/postings"),
+        () => graft.functions.Bm25.docLengths(live, idCol, textCol)
+          .join(seqOf, idCol)
+          .write.mode("overwrite").parquet(s"$segDir/doclengths"),
+        // positional postings — quoted-phrase queries over the streamed
+        // corpus serve these exactly like the batch index's table
+        () => graft.operators.PhraseSearch.positions(live, idCol, textCol)
+          .join(seqOf, idCol)
+          .write.mode("overwrite").parquet(s"$segDir/positions"),
+        () => {
+          val pars = graft.sources.Ingest.splitParagraphs(live, idCol, textCol)
+            .join(seqOf, idCol).cache()
+          try {
+            // the paragraphs write fills `pars`' cache before the pair
+            // below reads it concurrently
+            pars.write.mode("overwrite").parquet(s"$segDir/paragraphs")
+            // paragraph-level BM25 pair: rows re-keyed to their doc's
+            // (id, seq) via the paragraph table so cross-segment
+            // latest-wins stays the same winner semi-join;
+            // repeated_in_field rides along like in the batch pair so the
+            // streamed surface serves the same default search mode
+            val parKeys = pars.select(col("paragraph_id"), col(idCol), col(seqCol),
+              col("repeated_in_field"))
+            graft.sources.Ingest.inParallel(batch.sparkSession)(
+              () => graft.sources.Ingest.termPostings(pars, "paragraph_id", "p_text")
+                .drop("df") // per-segment df ≠ served population, as above
+                .join(parKeys, "paragraph_id")
+                .write.mode("overwrite").parquet(s"$segDir/par_postings"),
+              () => graft.functions.Bm25.docLengths(pars, "paragraph_id", "p_text")
+                .join(parKeys, "paragraph_id")
+                .write.mode("overwrite").parquet(s"$segDir/par_doclengths"))
+          } finally pars.unpersist()
+        },
+        // MinHash signatures — near-dup requests over the streamed corpus
+        // serve these like the batch table (a pure per-document function,
+        // so per-segment rows union with the winner semi-join). The
+        // parameters default to buildIndex's; a deployment diverging
+        // there must diverge HERE too (the width self-describes and is
+        // validated at serve time, the shingle size does not).
+        () => graft.operators.Dedup.minHashSignatures(
+            live.select(col(idCol), explode(graft.functions.TextFunctions.shingles(
+              graft.functions.TextFunctions.tokens(col(textCol)), shingleSize)).as("shingle")),
+            idCol, numHashes = numHashes)
+          .join(seqOf, idCol)
+          .write.mode("overwrite").parquet(s"$segDir/signatures"),
+        // relation triplets — the message-carried relations of each live
+        // doc (`noderesources.proto:201-209` IndexRelations ride the
+        // broker message; the resource node is the source), exploded to
+        // (id, seq, rel, dst) rows so cross-segment latest-wins is the
+        // same winner semi-join as every sibling table. A doc update
+        // REPLACES its relations: the old segment's rows lose the winner
+        // join, exactly like its postings
+        () => relationsCol.foreach { rc =>
+          live.select(col(idCol), col(seqCol), explode(col(rc)).as("__r"))
+            .select(col(idCol), col(seqCol),
+              col("__r.rel").as("rel"), col("__r.dst").as("dst"))
+            .write.mode("overwrite").parquet(s"$segDir/edges")
+        },
+        // MESSAGE-GRAIN conversation rows — the /augment and /ask
+        // Conversational selectors read whole messages (the reference
+        // reads maindb, `augmentor/fields.py:300-310`; chunked paragraph
+        // tables cannot reconstruct them), so conversation-bearing
+        // streams carry the messages alongside the index. Each message
+        // is a struct (field_id, split, mtype, mtext); a doc update
+        // REPLACES its conversation (the rows lose the winner semi-join
+        // like its postings), a tombstone removes it
+        () => messagesCol.foreach { mc =>
+          live.select(col(idCol), col(seqCol), explode(col(mc)).as("__m"))
+            .select(col(idCol), col(seqCol),
+              col("__m.field_id").as("field_id"),
+              col("__m.split").as("split"),
+              col("__m.mtype").as("mtype"),
+              col("__m.mtext").as("mtext"))
+            .write.mode("overwrite").parquet(s"$segDir/messages")
+        },
+        () => {
+          // one codes/raw pair per named vectorset (the Option form is the
+          // single default set), vectorset-tagged and partitioned
+          // (vectorset, centroid_id) like the batch per-set layout — a
+          // named-set query prunes its vectorset directory inside every
+          // segment
+          val sets = vectorSets ++ vectors.map("default" -> _)
+          // an all-tombstone batch has no vectors to encode — and a
+          // PARTITIONED write of an empty frame produces a directory with
+          // no schema-carrying files, which poisons every later read of
+          // the root. Skip the pair entirely: the serving union filters on
+          // per-segment `hasSub("codes")`, so an absent dir is the one
+          // empty representation every reader already handles.
+          if (sets.nonEmpty && !live.isEmpty) {
+            import graft.operators.VectorSearch
+            import batch.sparkSession.implicits._
+            def forSet(vs: String, spec: SegmentVectorSpec) = {
+              val vecs = live.select(col(idCol), col(seqCol),
+                col(spec.vecCol).as("embedding"))
+              val centDf = spec.centroids.toDF("cid", "cvec")
+              val codes = VectorSearch
+                .pqCodesBinary(vecs, idCol, "embedding", spec.codebook, spec.m)
+                .join(VectorSearch.ivfAssign(vecs, idCol, "embedding",
+                  centDf, "cid", "cvec").select(col(idCol), col("centroid_id")), idCol)
+                .join(seqOf, idCol)
+                .withColumn("vectorset", lit(vs))
+              (vecs.withColumn("vectorset", lit(vs)), codes)
+            }
+            val pairs = sets.toSeq.sortBy(_._1).map { case (vs, spec) => forSet(vs, spec) }
+            graft.sources.Ingest.inParallel(batch.sparkSession)(
+              () => pairs.map(_._1).reduce(_ unionByName _)
+                .write.mode("overwrite").partitionBy("vectorset")
+                .parquet(s"$segDir/vectors"),
+              () => pairs.map(_._2).reduce(_ unionByName _)
+                .write.mode("overwrite").partitionBy("vectorset", "centroid_id")
+                .parquet(s"$segDir/codes"))
+          }
+        })
     } finally latest.unpersist()
     ()
   }
@@ -950,19 +962,6 @@ object IncrementalIndex {
         latestDocRows(docsUnion, idCol, seqCol)
           .join(keep, Seq(idCol, seqCol), "left_semi")
     }
-    latest.write.mode("overwrite").parquet(s"$out/docs")
-    healDl(tables.postings, tables.docLengths, Seq(idCol))
-      .write.mode("overwrite").parquet(s"$out/postings")
-    tables.docLengths.write.mode("overwrite").parquet(s"$out/doclengths")
-    healRepeated(tables.paragraphs)
-      .write.mode("overwrite").parquet(s"$out/paragraphs")
-    tables.parPostings.foreach { p =>
-      val healed = tables.parDocLengths
-        .map(d => healDl(p, d, Seq("paragraph_id"))).getOrElse(p)
-      healRepeated(healed).write.mode("overwrite").parquet(s"$out/par_postings")
-    }
-    tables.parDocLengths.foreach(d => healRepeated(d).write.mode("overwrite")
-      .parquet(s"$out/par_doclengths"))
     // optional tables fold from the SUBSET of inputs that carry them —
     // never the forall gate: on a mixed root (segments from before the
     // table existed) the forall would silently OMIT the table from the
@@ -977,30 +976,55 @@ object IncrementalIndex {
         servedSub(spark, withSub, sub, idCol, seqCol, Some(winners))
           .write.mode("overwrite").parquet(s"$out/$sub")
     }
-    foldOptional("positions")
-    foldOptional("signatures")
-    foldOptional("edges")
-    foldOptional("messages")
-    // vector segments fold the same way: winning codes/raw rows move to
-    // the compacted segment (codes keep the centroid partitioning).
-    // Folds the ONCE-listed dirs, not a fresh listing — a segment the
-    // live stream writes mid-compaction must not fold without deletion
-    if (dirs.exists(d => hasSub(spark, d, "codes"))) {
-      val (codes, raw) = vectorTablesFrom(spark, dirs, idCol, seqCol,
-        Some(winners))
-      // same empty-partitioned-write hazard as writeSegment: a fold
-      // whose vector rows are ALL dead (e.g. a pressure fold of a
-      // fully-masked segment) must emit NO codes dir, not a broken one
-      val codesC = codes.cache()
-      try {
-        if (!codesC.isEmpty) {
-          codesC.write.mode("overwrite").partitionBy("vectorset", "centroid_id")
-            .parquet(s"$out/codes")
-          raw.write.mode("overwrite").partitionBy("vectorset")
-            .parquet(s"$out/vectors")
-        }
-      } finally codesC.unpersist()
-    }
+    // the table writes run as concurrent jobs (Ingest.inParallel); the
+    // commit below (subsumed manifest, then rename) starts only after
+    // every one has finished, so a failed write leaves no manifest and
+    // no rename, and the retry pass wipes the staging dir
+    graft.sources.Ingest.inParallel(spark)(
+      () => latest.write.mode("overwrite").parquet(s"$out/docs"),
+      () => {
+        // the first write through `winners` fills its cache before its
+        // other readers start (concurrent first reads would each run
+        // the cache's fill job)
+        healDl(tables.postings, tables.docLengths, Seq(idCol))
+          .write.mode("overwrite").parquet(s"$out/postings")
+        graft.sources.Ingest.inParallel(spark)(
+          () => tables.docLengths.write.mode("overwrite").parquet(s"$out/doclengths"),
+          () => healRepeated(tables.paragraphs)
+            .write.mode("overwrite").parquet(s"$out/paragraphs"),
+          () => tables.parPostings.foreach { p =>
+            val healed = tables.parDocLengths
+              .map(d => healDl(p, d, Seq("paragraph_id"))).getOrElse(p)
+            healRepeated(healed).write.mode("overwrite").parquet(s"$out/par_postings")
+          },
+          () => tables.parDocLengths.foreach(d => healRepeated(d).write.mode("overwrite")
+            .parquet(s"$out/par_doclengths")),
+          () => foldOptional("positions"),
+          () => foldOptional("signatures"),
+          () => foldOptional("edges"),
+          () => foldOptional("messages"),
+          // vector segments fold the same way: winning codes/raw rows
+          // move to the compacted segment (codes keep the centroid
+          // partitioning). Folds the ONCE-listed dirs, not a fresh
+          // listing — a segment the live stream writes mid-compaction
+          // must not fold without deletion
+          () => if (dirs.exists(d => hasSub(spark, d, "codes"))) {
+            val (codes, raw) = vectorTablesFrom(spark, dirs, idCol, seqCol,
+              Some(winners))
+            // same empty-partitioned-write hazard as writeSegment: a fold
+            // whose vector rows are ALL dead (e.g. a pressure fold of a
+            // fully-masked segment) must emit NO codes dir, not a broken one
+            val codesC = codes.cache()
+            try {
+              if (!codesC.isEmpty) {
+                codesC.write.mode("overwrite").partitionBy("vectorset", "centroid_id")
+                  .parquet(s"$out/codes")
+                raw.write.mode("overwrite").partitionBy("vectorset")
+                  .parquet(s"$out/vectors")
+              }
+            } finally codesC.unpersist()
+          })
+      })
     val names = dirs.map(d => new org.apache.hadoop.fs.Path(d).getName)
     // carry forward the inputs' subsumed entries, PRUNED: keep an entry
     // while its dir is on disk (pending delete retry) or while a batch
