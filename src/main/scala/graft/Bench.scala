@@ -174,31 +174,47 @@ object Bench {
     * warmup) so the JSON carries the per-query job count, the
     * deterministic structure evidence the scaling block lacks at an SF
     * where wall-clock ratios measure scheduling. Listener events post
-    * asynchronously, so [[apply]] drains the listener bus before the
+    * asynchronously, so [[counted]] drains the listener bus before the
     * reset and before the read: every earlier job's event is delivered
     * before the reset, and every job of `body` before the read — exact
     * attribution with no settle sleeps. The drains sit OUTSIDE the
-    * timed region and never touch the reported seconds. */
+    * timed region and never touch the reported seconds. The same
+    * listener counts completed stages and ended tasks for
+    * [[Run]]'s `jobs` mode. */
   private[graft] final class JobCounter(sc: org.apache.spark.SparkContext) {
-    private val started = new java.util.concurrent.atomic.AtomicInteger
-    val listener: org.apache.spark.scheduler.SparkListener =
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          started.incrementAndGet(); ()
-        }
+    import org.apache.spark.scheduler._
+    private val jobs, stages, tasks = new java.util.concurrent.atomic.AtomicInteger
+    val listener: SparkListener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
       }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet(); ()
+      }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet(); ()
+      }
+    }
     sc.addSparkListener(listener)
 
     /** `body`'s result and the number of Spark jobs it started. */
     def apply[A](body: => A): (A, Int) = {
+      val (a, c) = counted(body)
+      (a, c.jobs)
+    }
+
+    /** `body`'s result and the jobs it started, stages it completed
+      * and tasks it ended. */
+    def counted[A](body: => A): (A, JobCounts) = {
       ListenerBusBridge.drain(sc)
-      started.set(0)
+      Seq(jobs, stages, tasks).foreach(_.set(0))
       val a = body
       ListenerBusBridge.drain(sc)
-      (a, started.get)
+      (a, JobCounts(jobs.get, stages.get, tasks.get))
     }
   }
+
+  private[graft] final case class JobCounts(jobs: Int, stages: Int, tasks: Int)
 
   private def runSuite(spark: SparkSession, sfDir: String,
       warm: Boolean, countJobs: Option[JobCounter] = None)
@@ -265,11 +281,7 @@ object Bench {
     // ~1 min) — compare the printed seconds against bench_best.json's
     // spark_canary_c{cpus} to find a clean window before a re-best run
     if (args.contains("host-probe")) {
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val s = SparkSession.builder().master(s"local[$cpus0]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
+      val s = Run.session()
       sparkCanary(s) // warmup + 2 (discarded — JIT/codegen settle)
       (1 to 5).foreach { i =>
         val t = sparkCanaryOnce(s)
@@ -278,23 +290,9 @@ object Bench {
       s.stop()
       return
     }
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // scale-dependent knob, parameterised (round 18): the default 32
-      // keeps the driver's bench series comparable across rounds; a
-      // cluster deployment sizes it from data volume (or leans on
-      // AQE's advisoryPartitionSizeInBytes coalescing, which already
-      // runs here) instead of inheriting a local-mode constant
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Run.sfDir
+    val spark = Run.session()
+    val cpus = spark.sparkContext.defaultParallelism
     val jobCounter = new JobCounter(spark.sparkContext)
 
     val loadBefore = loadAvg()

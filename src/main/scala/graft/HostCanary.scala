@@ -58,10 +58,10 @@ object HostCanary {
     * warmup + the opening sample. Stamping at PRINT time instead (two
     * samples both after the measurement) misses a window that closes
     * before the print — the exact mid-suite failure mode the stamps
-    * exist to catch. Uncalibrated (no recorded best for this cpu
-    * count): raw seconds print instead of a factor. */
-  final class Stamper(spark: SparkSession, cpus: Int) {
-    private val best = recordedBest(cpus)
+    * exist to catch. Uncalibrated (no recorded best for the session's
+    * core count): raw seconds print instead of a factor. */
+  final class Stamper(spark: SparkSession) {
+    private val best = recordedBest(spark.sparkContext.defaultParallelism)
     sparkJobOnce(spark) // codegen warmup, untimed
     private var prev = sparkJobTimed(spark)
 

@@ -84,8 +84,8 @@ object Pipeline {
     // comp ∩ survivors → min per component → anti-join the losers)
     // removes this window's corpus shuffle entirely, but re-executes
     // the quality+exact-keep subtree as the semi-join's build and
-    // measured 40% SLOWER interleaved at sf0.1 (ProfileCurate:
-    // old 1.44 s vs 2.01 s min-of-5) — rejected with numbers. The
+    // measured 40% SLOWER interleaved at sf0.1 (old 1.44 s vs
+    // 2.01 s, min-of-5) — rejected with numbers. The
     // ids-only projection above already shrinks this shuffle to one
     // narrow column, which is the scalable part of the win.
     val keepNear = {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -31,23 +31,16 @@ import graft.streaming.IncrementalIndex
   * Scaled corpora are materialized to parquet first; measured times
   * never include generation.
   *
-  * Run: `sbt "runMain graft.tools.ScaleStress"`; results are recorded
-  * in DESIGN.md ("Scale-stress measurements").
+  * Run: `SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.ScaleStress"`
+  * (the session is [[graft.Run.session]]); results are recorded in
+  * DESIGN.md ("Scale-stress measurements"), measured on local[32].
   */
 object ScaleStress {
 
   import Timing.{med3, timed}
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Run.session()
     val sf = "/root/testdata/sf0.1"
     val out = graft.sources.IndexStore.deleteOnExit(
       java.nio.file.Files.createTempDirectory("graft-stress-").toString)
@@ -85,7 +78,7 @@ object ScaleStress {
     // one synthetic spark-canary sample between stress rows (the same
     // fixed job Bench interleaves): each row's printed factor is the
     // slower of its two samples BRACKETING the measurement, over the
-    // ratcheted spark_canary_c32 best — a row measured inside a
+    // ratcheted spark_canary_c{cores} best — a row measured inside a
     // degraded-host window says so itself, where the findparagraphs
     // 1.7× / cachedstats 1.5× readings were explained as
     // "late-sequence harness pressure" by hand since r13. Each row's
@@ -93,7 +86,7 @@ object ScaleStress {
     // mark at print time would put both samples after the work and
     // miss a window that closed in between). With no recorded best
     // the factor is unknowable — raw seconds print instead.
-    val stamp = new graft.HostCanary.Stamper(spark, 32)
+    val stamp = new graft.HostCanary.Stamper(spark)
 
     // ---- 1. MinHash LSH near-dup (signature + band join + verify) --
     def lsh(d: DataFrame) = Dedup.minHashLsh(d, "doc_id", "text").count()

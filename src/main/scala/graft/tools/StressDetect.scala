@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Focused re-measure of the `search_relations_detect` ScaleStress row
@@ -15,26 +15,20 @@ import org.apache.spark.sql.functions._
   * end to end — launch it on a `host-probe` GO and the whole
   * measurement fits the window that approved it.
   *
-  * Run: `sbt "runMain graft.tools.StressDetect"`.
+  * Run: `SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.StressDetect"`
+  * (the session is [[graft.Run.session]]).
   */
 object StressDetect {
 
   import Timing.med3
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Run.session()
     val sf = "/root/testdata/sf0.1"
     val out = graft.sources.IndexStore.deleteOnExit(
       java.nio.file.Files.createTempDirectory("graft-detect-").toString)
 
-    val stamp = new graft.HostCanary.Stamper(spark, 32)
+    val stamp = new graft.HostCanary.Stamper(spark)
 
     // ScaleStress section-3 recipe: lineitem edges, replicas key-offset
     // so the 10× table is ten disjoint graph copies

@@ -1,24 +1,17 @@
 package graft.tools
 
-/** Shared timing core for the scratch profilers (ProfileBm25,
-  * ProfileFind, TimeQuery) and the stress tools (ScaleStress,
-  * StressDetect): methodology changes happen here once.
+/** Shared timing core for [[graft.Run]]'s `time` mode and the stress
+  * tools (ScaleStress, StressDetect): methodology changes happen here
+  * once.
   */
 object Timing {
   /** Returns (min seconds, all run seconds, first run's row count).
-    * One warm pass, three timed runs, min — the profiler contract. */
-  def measure(f: => Long): (Double, Seq[Double], Long) = {
+    * One warm pass, then `passes` timed runs (three by default), min —
+    * the profiler contract. */
+  def measure(f: => Long, passes: Int = 3): (Double, Seq[Double], Long) = {
     f // warm: plan codegen + JIT
-    val runs = (1 to 3).map { _ =>
-      val t0 = System.nanoTime(); val n = f
-      ((System.nanoTime() - t0) / 1e9, n)
-    }
+    val runs = (1 to passes).map(_ => timed(f))
     (runs.map(_._1).min, runs.map(_._1), runs.head._2)
-  }
-
-  def time(label: String)(f: => Long): Unit = {
-    val (min, _, rows) = measure(f)
-    println(f"[profile] $label%-44s $min%6.3fs rows=$rows")
   }
 
   /** One raw timing, no warmup — the stress tools' BUILD rows (a

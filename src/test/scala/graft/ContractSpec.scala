@@ -45,6 +45,16 @@ class ContractSpec extends AnyFunSuite {
     assert(SparkEntry.queries.size == 193)
   }
 
+  test("src/main builds a SparkSession in exactly one place: Run.scala") {
+    import scala.jdk.CollectionConverters._
+    val main = java.nio.file.Paths.get("src/main/scala")
+    val builders = java.nio.file.Files.walk(main).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => java.nio.file.Files.readString(p).contains("SparkSession.builder()"))
+      .map(p => main.relativize(p).toString).toSeq
+    assert(builders == Seq("graft/Run.scala"))
+  }
+
   test("oracle SQL contains no tab or CR characters that could break the JSON dump") {
     SparkEntry.oracleSql.foreach { case (n, sql) =>
       assert(!sql.contains("\t") && !sql.contains("\r"), s"$n has tab/CR")
